@@ -3775,8 +3775,9 @@ def _srcsim_perms(m: int, salt: str = "srcsim-v1") -> str:
 def _duck_tsv(filename: str, schema) -> str:
     """DuckDB read_csv over a GDELT fixture TSV with the column
     names/types generated FROM THE SPARK SCHEMA — the two engines
-    parse the same file with the same contract, so reader parity
-    cannot drift."""
+    parse the same file with the same contract (tab-separated, no
+    header, quoting off: ``sources.gdelt.GDELT_TSV_OPTIONS``), so
+    reader parity cannot drift."""
     from pyspark.sql import types as T
 
     duck = {
@@ -3787,7 +3788,7 @@ def _duck_tsv(filename: str, schema) -> str:
     }
     cols = ", ".join(f"'{f.name}': '{duck[f.dataType]}'" for f in schema.fields)
     return (
-        f"read_csv('{GDELT_FIXTURES}/{filename}', delim='\t', "
+        f"read_csv('{GDELT_FIXTURES}/{filename}', delim='\t', quote='', "
         f"header=false, columns={{{cols}}})"
     )
 

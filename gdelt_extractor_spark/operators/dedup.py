@@ -2277,26 +2277,28 @@ def dedup_incremental(
     (build it with ``with_content_hash(...).select(hash_col)``; keep
     it as a bucketed table on the hash so tomorrow's anti join needs
     no shuffle on the index side).  Returns the surviving new rows —
-    batch-internal duplicates collapse keep-lowest-id first, then
-    anything already seen is anti-joined away.  Union the survivors'
-    hashes into ``seen`` afterwards with ``updated_index``.
+    anything already seen is anti-joined away, then batch-internal
+    duplicates collapse keep-lowest-id first.  The anti join drops
+    whole hash groups, so the order does not change the survivors.
+    Union the survivors' hashes into ``seen`` afterwards with
+    ``updated_index``.
 
     Plan: ONE shuffle of the (small) new batch on its content hash
-    for the keep-first window, then an anti join on the hash.  At
-    100 TB-of-history scale the index side dominates: against a
-    bucketed index the anti join shuffles only the day's batch;
-    unbucketed, both sides exchange once on the uniform hash key.
-    The historical TEXT is never read either way.
+    for the anti join; the keep-first window reuses the join's hash
+    partitioning, whatever the bucket count or
+    ``spark.sql.shuffle.partitions``.  At 100 TB-of-history scale
+    the index side dominates: against a bucketed index the anti join
+    shuffles only the day's batch; unbucketed, both sides exchange
+    once on the uniform hash key.  The historical TEXT is never read
+    either way.
     """
     hashed = with_content_hash(new_docs, text_col, out=hash_col)
+    unseen = hashed.join(seen.select(hash_col).distinct(), hash_col, "left_anti")
     w = Window.partitionBy(hash_col).orderBy(F.col(id_col).asc())
-    batch_first = (
-        hashed.withColumn("_rn", F.row_number().over(w))
+    return (
+        unseen.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-    )
-    return batch_first.join(
-        seen.select(hash_col).distinct(), hash_col, "left_anti"
     )
 
 

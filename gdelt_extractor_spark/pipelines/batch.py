@@ -26,12 +26,7 @@ from ..operators.enrich import enrich_articles_fetch
 from ..operators.geo import geo_project
 from ..sinks.files import write_parquet
 from ..sinks.jdbc import lastrun_df
-from ..sources.gdelt import (
-    V1_EVENTS_SCHEMA,
-    process_gdelt_events,
-    read_gdelt_v1,
-    read_gdelt_zip,
-)
+from ..sources.gdelt import process_gdelt_events, read_gdelt_v1, read_gdelt_zip
 
 # geom_base's projection (v2_table.py:68-84), lowercased as the
 # pipeline emits lowercase columns
@@ -46,6 +41,25 @@ GEOM_KEEP = (
     "avgtone",
     "sourceurl",
 )
+
+
+def _land(
+    spark: SparkSession,
+    out_dir: str,
+    prefix: str,
+    clean: DataFrame,
+    tables: dict[str, DataFrame],
+) -> dict[str, DataFrame]:
+    """The landing body shared by both runs: append the geometry
+    table of ``clean`` and the lastrun table to ``tables``, then write
+    every table to ``out_dir/<name>`` in order."""
+    tables[f"{prefix}_geom"] = geo_project(
+        clean, "actor1geo_lat", "actor1geo_long", *[c for c in GEOM_KEEP if c in clean.columns]
+    )
+    tables[f"{prefix}_lastrun"] = lastrun_df(spark)
+    for name, df in tables.items():
+        write_parquet(df, f"{out_dir}/{name}")
+    return tables
 
 
 def run_v2_batch(
@@ -71,15 +85,7 @@ def run_v2_batch(
             url_col="source",
             fetcher=fetcher,
         )
-
-    tables["v2_geom"] = geo_project(
-        clean, "actor1geo_lat", "actor1geo_long", *[c for c in GEOM_KEEP if c in clean.columns]
-    )
-    tables["v2_lastrun"] = lastrun_df(spark)
-
-    for name, df in tables.items():
-        write_parquet(df, f"{out_dir}/{name}")
-    return tables
+    return _land(spark, out_dir, "v2", clean, tables)
 
 
 def run_v1_batch(
@@ -94,16 +100,4 @@ def run_v1_batch(
     as the v2 flow resolves its zip URLs via ``parse_lastupdate``.
     """
     clean = process_gdelt_events(read_gdelt_v1(spark, tsv_path))
-    tables = {
-        "v1": clean,
-        "v1_geom": geo_project(
-            clean,
-            "actor1geo_lat",
-            "actor1geo_long",
-            *[c for c in GEOM_KEEP if c in clean.columns],
-        ),
-        "v1_lastrun": lastrun_df(spark),
-    }
-    for name, df in tables.items():
-        write_parquet(df, f"{out_dir}/{name}")
-    return tables
+    return _land(spark, out_dir, "v1", clean, {"v1": clean})

@@ -20,6 +20,17 @@ Parity targets:
 Network fetch of http://data.gdeltproject.org is out of scope in this
 environment; readers take local paths/globs.  The manifest parser is
 a pure function over the fetched text.
+
+One parsing contract, ``GDELT_TSV_OPTIONS`` (tab-separated, no
+header, PERMISSIVE, quoting off), turns a TSV line into a typed row
+for every reader: the four TSV readers, ``read_gdelt_zip`` and
+``streaming.updates.stream_gdelt_dir``.  GDELT fields are never
+quoted, so a ``"`` is data.  Empty fields, missing trailing fields
+and unparseable numbers read as NULL; extra trailing fields are
+dropped.  The zip reader only unzips and splits lines at LF, CRLF and
+CR (the breaks of the Hadoop line reader behind the file readers),
+then parses them with ``from_csv`` under the same options, so the zip
+and file paths return the same rows.
 """
 
 from __future__ import annotations
@@ -164,14 +175,12 @@ assert len(MENTIONS_SCHEMA) == 16
 assert len(GKG_SCHEMA) == 27
 
 
+# The one GDELT TSV parsing contract (module docstring).
+GDELT_TSV_OPTIONS = {"sep": "\t", "header": "false", "mode": "PERMISSIVE", "quote": ""}
+
+
 def _read_tsv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    return (
-        spark.read.option("sep", "\t")
-        .option("header", "false")
-        .option("mode", "PERMISSIVE")
-        .schema(schema)
-        .csv(path)
-    )
+    return spark.read.options(**GDELT_TSV_OPTIONS).schema(schema).csv(path)
 
 
 def read_gdelt_v2(spark: SparkSession, path: str) -> DataFrame:
@@ -499,45 +508,33 @@ def read_gdelt_zip(
     """Read zipped GDELT TSVs, decompressing executor-side.
 
     ``binaryFile`` scans the zips (each file one row); mapInPandas
-    unzips in memory and emits string columns which are then cast to
-    the typed schema.  Unlike the reference's driver temp-dir flow,
-    this parallelizes across however many zip files the glob matches.
+    unzips in memory and splits each member into non-blank lines
+    (universal newlines), and ``from_csv`` parses the lines into the
+    typed schema under ``GDELT_TSV_OPTIONS`` — the file readers'
+    contract, so both paths return the same rows.  Unlike the
+    reference's driver temp-dir flow, this parallelizes across however
+    many zip files the glob matches.
     """
-    names = [f.name for f in schema.fields]
-    str_schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
 
     def unzip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for content in pdf["content"]:
                 with zipfile.ZipFile(io.BytesIO(content)) as zf:
                     for member in zf.namelist():
-                        text = zf.read(member).decode("utf-8", errors="replace")
-                        rows = [
-                            line.split("\t")
-                            for line in text.split("\n")
-                            if line.strip()
-                        ]
-                        rows = [
-                            r[: len(names)] + [None] * max(0, len(names) - len(r))
-                            for r in rows
-                        ]
-                        yield pd.DataFrame(rows, columns=names)
+                        with io.TextIOWrapper(
+                            zf.open(member), encoding="utf-8", errors="replace"
+                        ) as text:
+                            lines = [ln.rstrip("\n") for ln in text if ln.strip()]
+                        yield pd.DataFrame({"value": lines}, dtype=object)
 
     raw = (
         spark.read.format("binaryFile")
         .load(path)
         .select("content")
-        .mapInPandas(unzip, str_schema)
+        .mapInPandas(unzip, "value string")
     )
-    # empty TSV fields → NULL (matching the csv reader's nullValue="")
-    casts = [
-        F.when(F.col(f.name) == "", None)
-        .otherwise(F.col(f.name))
-        .cast(f.dataType)
-        .alias(f.name)
-        for f in schema.fields
-    ]
-    return raw.select(*casts)
+    row = F.from_csv("value", schema.simpleString(), GDELT_TSV_OPTIONS)
+    return raw.select(row.alias("row")).select("row.*")
 
 
 def process_gdelt_events(df: DataFrame) -> DataFrame:

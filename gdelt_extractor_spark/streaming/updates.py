@@ -21,21 +21,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.gdelt import V2_EVENTS_SCHEMA
+from ..sources.gdelt import GDELT_TSV_OPTIONS, V2_EVENTS_SCHEMA
 
 
 def stream_gdelt_dir(
-    spark: SparkSession,
-    landing_dir: str,
-    schema: T.StructType = V2_EVENTS_SCHEMA,
-    max_files_per_trigger: int = 8,
+    spark: SparkSession, landing_dir: str, schema: T.StructType = V2_EVENTS_SCHEMA
 ) -> DataFrame:
-    """File-source stream of GDELT TSV drops."""
+    """File-source stream of GDELT TSV drops, parsed under the batch
+    readers' ``GDELT_TSV_OPTIONS``; at most 8 drops per trigger."""
     return (
         spark.readStream.format("csv")
-        .option("sep", "\t")
-        .option("header", "false")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .options(**GDELT_TSV_OPTIONS)
+        .option("maxFilesPerTrigger", "8")
         .schema(schema)
         .load(landing_dir)
     )

@@ -40,15 +40,36 @@ def _v2_row(eid: int, url: str, root: str = "14") -> str:
     return "\t".join(vals)
 
 
+V2_ROWS = [
+    _v2_row(1, "http://example.com/a", "14"),
+    _v2_row(2, "http://example.com/a", "14"),   # dup URL
+    _v2_row(3, "http://example.com/b", "19"),
+]
+
+
+def _set(row: str, i: int, value: str) -> str:
+    cells = row.split("\t")
+    cells[i] = value
+    return "\t".join(cells)
+
+
+# TSV texts the zip and file readers must parse alike: the edge rows
+# real GDELT drops carry and the committed fixtures avoid
+ZIP_CASES = {
+    "plain": "\n".join(V2_ROWS),
+    "empty_field": "\n".join([V2_ROWS[0], _set(_set(V2_ROWS[2], 34, ""), 60, "")]),
+    "short_row": "\n".join([V2_ROWS[0], "\t".join(V2_ROWS[2].split("\t")[:30])]),
+    "long_row": "\n".join([V2_ROWS[0], V2_ROWS[2] + "\textra\tcells"]),
+    "quote": "\n".join([V2_ROWS[0], _set(V2_ROWS[2], 6, '"GOVERNMENT')]),
+    "crlf": "\r\n".join(V2_ROWS) + "\r\n",
+    "non_numeric": "\n".join([V2_ROWS[0], _set(V2_ROWS[2], 31, "five")]),
+}
+
+
 @pytest.fixture(scope="module")
 def v2_tsv(tmp_path_factory):
     p = tmp_path_factory.mktemp("gdelt") / "20240101083000.export.CSV"
-    rows = [
-        _v2_row(1, "http://example.com/a", "14"),
-        _v2_row(2, "http://example.com/a", "14"),   # dup URL
-        _v2_row(3, "http://example.com/b", "19"),
-    ]
-    p.write_text("\n".join(rows))
+    p.write_text(ZIP_CASES["plain"])
     return str(p)
 
 
@@ -82,14 +103,22 @@ def test_process_events_dedup_and_lowercase(spark, v2_tsv):
     assert all(c == c.lower() for c in df.columns)
 
 
-def test_read_zip_roundtrip(spark, v2_tsv, tmp_path):
+@pytest.mark.parametrize("case", list(ZIP_CASES))
+def test_read_zip_roundtrip(spark, tmp_path, case):
+    """The zip path returns exactly the TSV path's rows (one parsing
+    contract), one row per line, quoting off."""
+    tsv = tmp_path / "20240101083000.export.CSV"
+    tsv.write_bytes(ZIP_CASES[case].encode())
     zpath = tmp_path / "20240101083000.export.CSV.zip"
     with zipfile.ZipFile(zpath, "w") as zf:
-        zf.write(v2_tsv, arcname=os.path.basename(v2_tsv))
+        zf.write(tsv, arcname=tsv.name)
     df = G.read_gdelt_zip(spark, str(zpath))
-    plain = G.read_gdelt_v2(spark, v2_tsv)
+    plain = G.read_gdelt_v2(spark, str(tsv))
     assert df.schema == plain.schema
-    assert sorted(df.collect()) == sorted(plain.collect())
+    want = plain.collect()
+    assert len(want) == len(ZIP_CASES[case].splitlines())
+    assert all(r.EventRootCode is not None for r in want)  # no row swallowed
+    assert sorted(map(repr, df.collect())) == sorted(map(repr, want))
 
 
 def test_parse_lastupdate():
